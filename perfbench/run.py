@@ -25,7 +25,6 @@ import shutil
 import signal
 import subprocess
 import sys
-import zipfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 WORKLOADS = ("graph_local", "graph_dist", "registry_batch")
@@ -91,9 +90,7 @@ def build(root, work):
         lines = [l.strip() for l in f if l.strip()]
     if rc != 0 or not lines or ".jar" not in lines[-1]:
         fail("build failed:\n" + "\n".join(lines[-20:]), 1)
-    cp = jar_dirs(lines[-1], os.path.join(bdir, "jars"))
-    archive = os.path.join(bdir, "classes.jsa")
-    train_class_archive(root, cp, archive, os.path.join(bdir, "train"))
+    cp = lines[-1]
     with open(cp_file, "w") as f:
         f.write(cp)
     with open(stamp_file, "w") as f:
@@ -101,45 +98,9 @@ def build(root, work):
     return cp
 
 
-def jar_dirs(classpath, jar_dir):
-    """Zip each class directory on the classpath into a jar: the JVM's
-    class-data archive only covers classes loaded from jars."""
-    shutil.rmtree(jar_dir, ignore_errors=True)
-    os.makedirs(jar_dir)
-    out = []
-    for i, entry in enumerate(classpath.split(os.pathsep)):
-        if os.path.isdir(entry):
-            jar = os.path.join(jar_dir, f"classes{i}.jar")
-            with zipfile.ZipFile(jar, "w") as z:
-                for d, _, files in os.walk(entry):
-                    for f in sorted(files):
-                        full = os.path.join(d, f)
-                        z.write(full, os.path.relpath(full, entry))
-            entry = jar
-        out.append(entry)
-    return os.pathsep.join(out)
-
-
-def train_class_archive(root, cp, archive, train_dir):
-    """One short graph_local run that dumps the classes it loaded into a
-    class-data-sharing archive; later runs map it instead of loading and
-    verifying those classes again, which takes seconds off every JVM
-    start. Without an archive the runs simply start slower."""
-    if os.path.exists(archive):
-        os.remove(archive)
-    os.makedirs(os.path.join(train_dir, "tmp"), exist_ok=True)
-    cmd = jvm_cmd(cp, train_dir, [f"-XX:ArchiveClassesAtExit={archive}"]) + [
-        "--workload", "graph_local", "--seed", "0", "--seconds", "1", "--trace", "0",
-        "--work", train_dir, "--data", os.path.join(HERE, "data", "sf0.001"),
-        "--out", os.path.join(train_dir, "out.json")]
-    with open(os.path.join(train_dir, "jvm.log"), "w") as out:
-        run_bounded(cmd, root, dict(os.environ), out, RUN_TIMEOUT_S)
-    shutil.rmtree(train_dir, ignore_errors=True)
-
-
-def jvm_cmd(cp, run_dir, extra):
+def jvm_cmd(cp, run_dir):
     return (["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+AlwaysPreTouch", f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')}",
-             f"-Dderby.system.home={run_dir}", "-Dspark.ui.enabled=false"] + extra
+             f"-Dderby.system.home={run_dir}", "-Dspark.ui.enabled=false"]
             + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
             + ["-cp", cp, "graft.perfbench.Main"])
 
@@ -226,9 +187,7 @@ def main():
     os.makedirs(os.path.join(run_dir, "tmp"))
     out_json = os.path.join(run_dir, "out.json")
     data_dir = os.path.join(HERE, "data", "sf0.001")
-    archive = os.path.join(work, "build", "classes.jsa")
-    share = [f"-XX:SharedArchiveFile={archive}"] if os.path.exists(archive) else []
-    cmd = jvm_cmd(cp, run_dir, share) + [
+    cmd = jvm_cmd(cp, run_dir) + [
         "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
         "--trace", str(a.trace), "--work", run_dir, "--data", data_dir, "--out", out_json]
     log = os.path.join(run_dir, "jvm.log")
@@ -244,7 +203,8 @@ def main():
     failed, report = res["failed"], dict(res["report"])
     if a.workload == "registry_batch":
         checked, bad_keys, bad_lookups = oracle_check(root, os.path.join(run_dir, "registry"), data_dir)
-        failed += int(report["executions_per_key"]) * len(bad_keys) + len(bad_lookups)
+        executions = dict(x.split("=") for x in report["executions_per_key"].split(","))
+        failed += sum(int(executions[k]) for k in bad_keys) + len(bad_lookups)
         report["oracle"] = (f"{checked} keys checked against DuckDB, {len(bad_keys)} mismatched; "
                             f"lookups mismatched: {len(bad_lookups)}")
         for k, why in bad_keys.items():

@@ -68,6 +68,14 @@ final class GraphData(val nodes: Int, val src: Array[Int], val dst: Array[Int]) 
   def shortestPath(source: Int, target: Int): Long =
     if (source == target) 0L else levels(source, -1)(target).toLong
 
+  /** A node `hops` BFS levels from `source`, uniform among those by
+    * `rng`; a uniform node when there is none. */
+  def targetAt(source: Int, hops: Int, rng: java.util.SplittableRandom): Int = {
+    val d = levels(source, -1)
+    val at = d.indices.filter(v => v != source && d(v) == hops)
+    if (at.isEmpty) rng.nextInt(nodes) else at(rng.nextInt(at.length))
+  }
+
   /** The reference's `load_database` input pair: one node id per line,
     * and a '#'-commented `src<TAB>dst` edge list. Each is a directory of
     * `parts` files, so the engine's text scan splits across cores. */

@@ -5,7 +5,7 @@ import java.util.SplittableRandom
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.BucketingUtils
@@ -15,15 +15,11 @@ import graft.Reset
 import graft.graph.{GraphXBridge, LocalExec, PropertyGraph, Traversals}
 import graft.sources.Bucketing
 
-/** What [[Main]] hands every workload. */
-final case class Ctx(spark: SparkSession, client: Client, work: Path, seed: Long,
-                     seconds: Double, cores: Int, sessionStartS: Double,
-                     clock: Clock)
-
 /** Size of a graph workload's input and the route LocalExec should pick
   * for it (1.0 = every traversal driver-local, 0.0 = every one
-  * distributed). */
-final case class GraphShape(nodes: Int, edges: Int, maxBytes: Option[Long], expectedAdmit: Double)
+  * distributed), and how many cold passes a run makes. */
+final case class GraphShape(nodes: Int, edges: Int, maxBytes: Option[Long], expectedAdmit: Double,
+                            coldPasses: Int)
 
 sealed trait GraphReq { def kind: String }
 final case class Lookup(id: Int) extends GraphReq { def kind = "lookup" }
@@ -33,12 +29,10 @@ final case class Ssp(src: Int, dst: Int) extends GraphReq { def kind = "ssp" }
 /** The reference's interactive `GraphDriver` ops against a seeded
   * power-law digraph: `get_single_node` (bucketed point lookup),
   * `get_nodes_hops` (k-hop) and `ssp`, issued by one closed-loop client. */
-final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
+final class GraphWorkload(shape: GraphShape, data: GraphData, in: Path, ctx: Ctx) extends Workload {
   import GraphWorkload._
   private val spark = ctx.spark
   private val client = ctx.client
-  private val data = GraphData.powerLaw(shape.nodes, shape.edges, ctx.seed)
-  private val decile = math.max(1, shape.nodes / 10)
 
   private var edges: DataFrame = _
   private var graph: PropertyGraph = _
@@ -53,9 +47,10 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
   private val files = mutable.Map.empty[Int, Long]
 
   /** Load the node and edge lists, stage the edges to parquet and the
-    * nodes (with out-degree) to a bucketed table. Returns (build ms,
-    * load s, total s). */
-  private def setUp(in: Path, stage: Path): (Double, Double, Double) = {
+    * nodes (with out-degree) to a bucketed table. */
+  def setUp(): Setup = {
+    val stage = ctx.work.resolve("stage")
+    shape.maxBytes.foreach(b => spark.conf.set(LocalExec.MaxBytesKey, b.toString))
     client.span("reset.clear")(Reset.clear(spark))
     val t0 = System.nanoTime()
     val g = client.span("graph.property.build")(
@@ -72,7 +67,7 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
     graph = PropertyGraph(spark.table(NodeTable), edges)
     client.span("graph.localexec.admit")(LocalExec.smallEnoughEdges(edges))
     val t2 = System.nanoTime()
-    ((t1 - t0) / 1e6, (t2 - t1) / 1e9, (t2 - t0) / 1e9)
+    Setup(0.0, (t1 - t0) / 1e6, (t2 - t1) / 1e9, (t2 - t0) / 1e9)
   }
 
   private def issue(r: GraphReq, phase: String): Unit = {
@@ -119,30 +114,21 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
     case Ssp(s, t) => data.shortestPath(s, t)
   }
 
-  def run(): RunResult = {
-    shape.maxBytes.foreach(b => spark.conf.set(LocalExec.MaxBytesKey, b.toString))
-    val in = ctx.work.resolve("in")
-    data.writeFiles(in.resolve("nodes"), in.resolve("edges"), Parts)
-    ctx.clock.mark("inputs")
-    val setups = (1 to SetupRuns).map(_ => setUp(in, ctx.work.resolve("stage")))
-    ctx.clock.mark("setup")
-
-    // The cold pass: one request of each kind (a 2-hop for the k-hop),
-    // right after a Reset.clear, repeated while the passes stay short.
-    // The warm window follows for at least `seconds` and at least
-    // MinWindow requests.
-    val coldRng = new SplittableRandom(GraphData.mix(ctx.seed))
-    val coldReqs = Seq(KHop(coldRng.nextInt(decile), 2),
-      Ssp(coldRng.nextInt(decile), coldRng.nextInt(shape.nodes)), Lookup(coldRng.nextInt(shape.nodes)))
-    val colds = mutable.ArrayBuffer.empty[Double]
-    while (colds.isEmpty || (colds.length < MaxColdPasses && colds.sum < ColdPassSeconds)) {
-      if (colds.nonEmpty) client.span("reset.clear")(Reset.clear(spark))
-      val c0 = System.nanoTime()
-      coldReqs.foreach(issue(_, "cold"))
-      colds += (System.nanoTime() - c0) / 1e9
+  def run(setups: Seq[Setup]): RunResult = {
+    // The request stream runs untimed for WarmupSeconds, so the JIT has
+    // settled, then timed in the window for at least `seconds` and at
+    // least MinWindow requests. The cold passes follow: one request of
+    // each kind, drawn from a second stream (the k-hop always a 2-hop),
+    // each pass right after a Reset.clear. Requests are drawn ahead, so
+    // the BFS behind each ssp target stays out of the timed window.
+    val stream = {
+      val it = requests(new SplittableRandom(ctx.seed), data)
+      Vector.fill(Planned)(it.next()).iterator ++ it
     }
-    ctx.clock.mark("cold")
-    val stream = requests(new SplittableRandom(ctx.seed), shape.nodes)
+    ctx.clock.mark("plan")
+    val warmupEnd = System.nanoTime() + (WarmupSeconds * 1e9).toLong
+    while (System.nanoTime() < warmupEnd) issue(stream.next(), "warmup")
+    ctx.clock.mark("warmup")
     val warm0 = LocalExec.warmEntries
     val w0 = System.nanoTime()
     val deadline = w0 + (ctx.seconds * 1e9).toLong
@@ -154,6 +140,21 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
     val windowS = (System.nanoTime() - w0) / 1e9
     val warmGrowth = LocalExec.warmEntries - warm0
     ctx.clock.mark("window")
+    val coldStream = requests(new SplittableRandom(GraphData.mix(ctx.seed)), data)
+    def nextOf(kind: String): GraphReq = {
+      var r = coldStream.next()
+      while (r.kind != kind) r = coldStream.next()
+      r match {
+        case KHop(s, _) => KHop(s, 2)
+        case other => other
+      }
+    }
+    val coldPasses = (1 to shape.coldPasses).map(_ => Kinds.map(nextOf))
+    coldPasses.foreach { pass =>
+      client.span("reset.clear")(Reset.clear(spark))
+      pass.foreach(issue(_, "cold"))
+    }
+    ctx.clock.mark("cold")
 
     org.apache.spark.perfbench.Internals.drained(spark.sparkContext, 10000L)
     issued.foreach { case (id, r) =>
@@ -170,16 +171,19 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
     val ok = window.filter(_.ok)
     def lat(kind: String) = ok.filter(_.kind == kind).map(_.ms)
     val opsPerS = ok.length / windowS
-    // the warm cost of the cold pass: one request of each kind at its
-    // window median
-    val warmS = Seq("lookup", "khop", "ssp").map(k => Stats.median(lat(k))).sum / 1000.0
+    // the cost of one request of each kind: cold, at its median over the
+    // cold passes; warm, at its window median
+    val cold = all.filter(o => o.phase == "cold" && o.ok)
+    def coldLat(kind: String) = cold.filter(_.kind == kind).map(_.ms)
+    val coldS = Kinds.map(k => Stats.median(coldLat(k))).sum / 1000.0
+    val warmS = Kinds.map(k => Stats.median(lat(k))).sum / 1000.0
     val e2e = Seq(
-      Metric("setup_s", Stats.median(setups.map(_._3)), "s", setups.length),
+      Metric("setup_s", Stats.median(setups.map(_.totalS)), "s", setups.length),
       Metric("lookup_p50_ms", Stats.median(lat("lookup")), "ms", lat("lookup").length),
       Metric("khop_p50_ms", Stats.median(lat("khop")), "ms", lat("khop").length),
       Metric("ssp_p50_ms", Stats.median(lat("ssp")), "ms", lat("ssp").length),
       Metric("ops_per_s", opsPerS, "1/s", ok.length),
-      Metric("batch_cold_s", Stats.median(colds.toSeq), "s", colds.length),
+      Metric("batch_cold_s", coldS, "s", shape.coldPasses),
       Metric("batch_warm_s", warmS, "s", ok.length),
       Metric("retained_heap_mb", heap, "MB", 1))
 
@@ -192,9 +196,9 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
     }
     val layers = new Layers(client, ctx.cores)
     layers.common(window)
-    layers.put("session.start_s", ctx.sessionStartS, "s", 1)
-    layers.put("graph.property.build_ms", Stats.median(setups.map(_._1)), "ms", setups.length)
-    layers.put("sources.load_s", Stats.median(setups.map(_._2)), "s", setups.length)
+    layers.put("session.start_s", Stats.median(setups.map(_.sessionS)), "s", setups.length)
+    layers.put("graph.property.build_ms", Stats.median(setups.map(_.buildMs)), "ms", setups.length)
+    layers.put("sources.load_s", Stats.median(setups.map(_.loadS)), "s", setups.length)
     layers.put("graph.localexec.admit_ratio", admit, "ratio", traversals.length)
     Seq("graph.localexec.khop", "graph.localexec.ssp", "graph.traversals.khop", "graph.graphx.ssp",
         "sources.lookup_build", "result.collect").foreach { s =>
@@ -221,7 +225,8 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
 
     val report = mutable.ArrayBuffer[(String, String)](
       "phases_s" -> ctx.clock.render,
-      "setup_runs_s" -> setups.map(x => f"${x._3}%.2f").mkString(","),
+      "setup_runs_s" -> Setup.render(setups),
+      "cold_ms" -> Kinds.map(k => s"$k=" + coldLat(k).map(x => f"$x%.0f").mkString("/")).mkString(" "),
       "generator" -> s"power-law nodes=${shape.nodes} edges=${shape.edges} (after self-loop drop: ${data.edges}) seed=${ctx.seed}",
       "route" -> f"admit_ratio=$admit%.3f expected=${shape.expectedAdmit}%.1f jobs_per_khop=${jobsPer("khop")}%.2f jobs_per_ssp=${jobsPer("ssp")}%.2f jobs_per_lookup=${jobsPer("lookup")}%.2f warm_entries_growth=$warmGrowth",
       "estimate_bytes" -> edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -229,7 +234,7 @@ final class GraphWorkload(shape: GraphShape, ctx: Ctx) {
       "window_errors" -> s"${window.length - ok.length} of ${window.length}")
     if (ok.length < 100)
       report += "window_ms" -> ok.map(o => f"${issued(o.id)}=${o.ms}%.0f").mkString(" ")
-    Seq("lookup", "khop", "ssp").foreach { k =>
+    Kinds.foreach { k =>
       report ++= Stats.tail(k, lat(k))
     }
     val failures = all.filterNot(_.ok)
@@ -243,35 +248,44 @@ object GraphWorkload {
   val Buckets = 8
   /** Input files per list, so the text scan splits across cores. */
   val Parts = 4
-  val SetupRuns = 3
 
-  val Local = GraphShape(nodes = 20000, edges = 200000, maxBytes = None, expectedAdmit = 1.0)
-  val Dist = GraphShape(nodes = 20000, edges = 200000, maxBytes = Some(512L << 10), expectedAdmit = 0.0)
+  /** graph_dist makes fewer cold passes: each takes about two seconds,
+    * and the run has to stay short. Its median over three passes spread
+    * no more across seeds than over five. */
+  val Local = GraphShape(nodes = 20000, edges = 200000, maxBytes = None, expectedAdmit = 1.0, coldPasses = 9)
+  val Dist = GraphShape(nodes = 20000, edges = 200000, maxBytes = Some(512L << 10), expectedAdmit = 0.0,
+    coldPasses = 3)
 
   /** Endless closed-loop request stream: kinds repeat [[Pattern]] (four
     * k-hops, three ssp and three lookups in every ten; its first
     * [[MinWindow]] hold seven k-hops, at least two per k, six ssp and
-    * five lookups), and
-    * k cycles through a seeded permutation of 1..3, so it is uniform over
-    * every three k-hops. k-hop and ssp sources come from the lowest-id
-    * decile, where the power-law mass is; lookup ids and ssp targets are
-    * uniform, so some targets are unreachable. */
-  def requests(rng: SplittableRandom, nodes: Int): Iterator[GraphReq] = {
-    val decile = math.max(1, nodes / 10)
+    * five lookups). k cycles through a seeded permutation of 1..3, so
+    * the median k-hop is a 2-hop. k-hop and ssp sources come from the
+    * lowest-id decile, where the power-law mass is; lookup ids are
+    * uniform. An ssp target is a uniform node [[SspHops]] hops from its
+    * source: with uniform targets nearly half the pairs are 3 hops apart
+    * and nearly half 4, so the median ssp would sit between two latency
+    * modes and move with the seed. */
+  def requests(rng: SplittableRandom, data: GraphData): Iterator[GraphReq] = {
+    val decile = math.max(1, data.nodes / 10)
     val ks = Iterator.continually(GraphData.shuffled(rng, Seq(1, 2, 3))).flatten
     Iterator.continually(Pattern).flatten.map {
       case 'k' => KHop(rng.nextInt(decile), ks.next())
-      case 'l' => Lookup(rng.nextInt(nodes))
-      case _ => Ssp(rng.nextInt(decile), rng.nextInt(nodes))
+      case 'l' => Lookup(rng.nextInt(data.nodes))
+      case _ =>
+        val s = rng.nextInt(decile)
+        Ssp(s, data.targetAt(s, SspHops, rng))
     }
   }
 
+  val SspHops = 3
+  /** Requests drawn before the warm-up: more than a run issues. */
+  val Planned = 1000
+
   val Pattern: String = "kslkslkslk"
+  val Kinds = Seq("lookup", "khop", "ssp")
   val MinWindow = 18
-  /** Cold passes repeat, each after a Reset.clear, while they add up to
-    * less than this many seconds, at most MaxColdPasses times. */
-  val ColdPassSeconds = 3.0
-  val MaxColdPasses = 3
+  val WarmupSeconds = 5.0
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
 

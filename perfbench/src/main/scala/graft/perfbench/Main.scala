@@ -17,12 +17,36 @@ object Json {
   def arr(vs: Seq[String]): String = vs.mkString("[", ",", "]")
 }
 
+/** What [[Main]] hands a workload: the session it runs on and the run's
+  * parameters. */
+final case class Ctx(spark: SparkSession, client: Client, work: Path, seed: Long,
+                     seconds: Double, cores: Int, clock: Clock)
+
+/** One set-up: session start, graph build (graph workloads) and the
+  * rest of the load, and their total. A workload's `setUp` fills in the
+  * build and the load; [[Main]] the session start and the total. */
+final case class Setup(sessionS: Double, buildMs: Double, loadS: Double, totalS: Double)
+
+object Setup {
+  /** Each set-up as total(session start), for the report. */
+  def render(setups: Seq[Setup]): String =
+    setups.map(x => f"${x.totalS}%.2f(${x.sessionS}%.2f)").mkString(",")
+}
+
+/** A workload loads its inputs into a fresh session in `setUp`, as often
+  * as [[Main]] asks, and then runs on the last session. */
+trait Workload {
+  def setUp(): Setup
+  def run(setups: Seq[Setup]): RunResult
+}
+
 /** One benchmark run inside one JVM:
   * `Main --workload W --seed N --seconds S --trace 0|1 --work DIR --data DIR --out FILE`.
   * Writes the run's metrics, counts and report to `--out`; `run.py`
   * turns that into the benchmark's result line. */
 object Main {
   val Workloads = Seq("graph_local", "graph_dist", "registry_batch")
+  val SetupRuns = 3
 
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
@@ -36,27 +60,45 @@ object Main {
     val cores = Runtime.getRuntime.availableProcessors()
 
     val clock = new Clock
-    val t0 = System.nanoTime()
-    val spark = graft.GraftSession.tune(SparkSession.builder().master(s"local[$cores]")
-      .config("spark.local.dir", work.resolve("spark-local").toString)
-      .config("spark.sql.warehouse.dir", work.resolve("warehouse").toString), cores)
-      .getOrCreate()
-    val sessionS = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.setLogLevel("ERROR")
-    clock.mark("session")
-
-    val client = new Client(spark, traced)
-    val ctx = Ctx(spark, client, work.resolve(workload), seed, seconds, cores, sessionS, clock)
-    val result = workload match {
-      case "graph_local" => new GraphWorkload(GraphWorkload.Local, ctx).run()
-      case "graph_dist" => new GraphWorkload(GraphWorkload.Dist, ctx).run()
+    val make: Ctx => Workload = workload match {
       case "registry_batch" =>
         val dir = out.getParent.resolve("registry")
         Files.createDirectories(dir)
-        new RegistryWorkload(ctx, opt("data")).run(dir)
+        c => new RegistryWorkload(c, opt("data"), dir)
+      case graphWorkload =>
+        val shape = if (graphWorkload == "graph_local") GraphWorkload.Local else GraphWorkload.Dist
+        val data = GraphData.powerLaw(shape.nodes, shape.edges, seed)
+        val in = work.resolve(workload).resolve("in")
+        data.writeFiles(in.resolve("nodes"), in.resolve("edges"), GraphWorkload.Parts)
+        c => new GraphWorkload(shape, data, in, c)
     }
+    clock.mark("inputs")
 
-    val residuals = if (traced) writeTrace(client, work.resolve("trace.jsonl")) else Nil
+    // Every set-up starts its own session and loads the inputs into it;
+    // the run continues on the last one. A set-up's time is session
+    // start plus load, and setup_s is the median over the set-ups.
+    var ctx: Ctx = null
+    var wl: Workload = null
+    val setups = (1 to SetupRuns).map { i =>
+      if (ctx != null) ctx.spark.stop()
+      val t0 = System.nanoTime()
+      val spark = graft.GraftSession.tune(SparkSession.builder().master(s"local[$cores]")
+        .config("spark.local.dir", work.resolve("spark-local").toString)
+        .config("spark.sql.warehouse.dir", work.resolve(s"warehouse$i").toString), cores)
+        .getOrCreate()
+      val sessionS = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.setLogLevel("ERROR")
+      ctx = Ctx(spark, new Client(spark, traced), work.resolve(workload), seed, seconds, cores, clock)
+      wl = make(ctx)
+      val load = wl.setUp()
+      load.copy(sessionS = sessionS, totalS = (System.nanoTime() - t0) / 1e9)
+    }
+    clock.mark("setup")
+    val spark = ctx.spark
+    val client = ctx.client
+    val result = wl.run(setups)
+
+    val residualShare = if (traced) writeTrace(client, work.resolve("trace.jsonl")) else 0.0
     val metrics = if (traced) result.perLayer else result.endToEnd
     val json = Json.obj(Seq(
       "workload" -> Json.str(workload),
@@ -65,7 +107,7 @@ object Main {
       "cores" -> cores.toString,
       "attempted" -> result.attempted.toString,
       "failed" -> result.failed.toString,
-      "residual_ok" -> residuals.forall(_ <= Layers.MaxResidual).toString,
+      "residual_ok" -> (residualShare <= Layers.MaxResidual).toString,
       "metrics" -> Json.obj(metrics.map(m => m.name -> Json.obj(Seq(
         "value" -> Json.num(m.value), "unit" -> Json.str(m.unit), "n" -> m.n.toString)))),
       "report" -> Json.obj(result.report.map { case (k, v) => k -> Json.str(v) })))
@@ -73,16 +115,15 @@ object Main {
     spark.stop()
   }
 
-  /** Spans to JSON lines; returns every request's residual share. */
-  private def writeTrace(client: Client, path: Path): Seq[Double] = {
+  /** Spans to JSON lines; returns the share of all requests' wall that
+    * no layer span covers. */
+  private def writeTrace(client: Client, path: Path): Double = {
     val spans = client.trace.spans
     val self = Trace.selfNanos(spans)
     val degraded = client.outcomes.filter(_.degraded).map(_.id).toSet
     val w = Files.newBufferedWriter(path)
     try Trace.toJsonLines(spans, self, degraded, client.counters.span).foreach { l => w.write(l); w.write('\n') }
     finally w.close()
-    Trace.attribution(spans).map { case (root, _, residual) =>
-      if (root.nanos > 0) residual.toDouble / root.nanos else 0.0
-    }
+    Layers.residualShare(Trace.attribution(spans))
   }
 }

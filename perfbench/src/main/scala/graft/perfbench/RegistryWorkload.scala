@@ -19,7 +19,7 @@ import graft.sources.{Bucketing, Tables}
   * client-fetch keys, the noop sink otherwise). Client point lookups on a
   * bucketed customer table ride along in every pass. Results are dumped
   * after the timed passes for the DuckDB oracle check `run.py` makes. */
-final class RegistryWorkload(ctx: Ctx, dataDir: String) {
+final class RegistryWorkload(ctx: Ctx, dataDir: String, out: Path) extends Workload {
   import RegistryWorkload._
   private val spark = ctx.spark
   private val client = ctx.client
@@ -27,7 +27,8 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
   private val lookupRows = mutable.ArrayBuffer.empty[(Int, Long, Seq[Seq[Any]])]
   private val lookupFiles = mutable.Map.empty[Int, Long]
 
-  private def setUp(): Double = {
+  /** Write the bucketed customer table the lookups read. */
+  def setUp(): Setup = {
     client.span("reset.clear")(Reset.clear(spark))
     val t0 = System.nanoTime()
     client.span("sources.load") {
@@ -37,7 +38,8 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
           col("c_mktsegment").as("mktsegment")),
         LookupTable, "id", 16)
     }
-    (System.nanoTime() - t0) / 1e9
+    val loadS = (System.nanoTime() - t0) / 1e9
+    Setup(0.0, 0.0, loadS, loadS)
   }
 
   private def runKey(key: String, phase: String): Unit = {
@@ -66,13 +68,12 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
     }
   }
 
-  def run(out: Path): RunResult = {
-    val setups = (1 to SetupRuns).map(_ => setUp())
-    ctx.clock.mark("setup")
+  def run(setups: Seq[Setup]): RunResult = {
     val rng = new SplittableRandom(ctx.seed)
     val customers = Tables.customer(spark, dataDir).count().toInt
     val order: Seq[Either[String, Long]] = {
-      val items = Keys.map(Left(_)) ++ Seq.fill(LookupsPerPass)(Right(1L + rng.nextInt(customers).toLong))
+      val items = Keys.flatMap(k => Seq.fill(perPass(k))(Left(k))) ++
+        Seq.fill(LookupsPerPass)(Right(1L + rng.nextInt(customers).toLong))
       GraphData.shuffled(rng, items)
     }
     def pass(phase: String): Double = {
@@ -114,7 +115,7 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
     val warmS = Stats.median(warm.toSeq)
     val opsPerS = ok.length / warm.sum
     val e2e = Seq(
-      Metric("setup_s", Stats.median(setups), "s", setups.length),
+      Metric("setup_s", Stats.median(setups.map(_.totalS)), "s", setups.length),
       Metric("lookup_p50_ms", Stats.median(lat("lookup")), "ms", lat("lookup").length),
       Metric("khop_p50_ms", Stats.median(lat("khop")), "ms", lat("khop").length),
       Metric("ssp_p50_ms", Stats.median(lat("ssp")), "ms", lat("ssp").length),
@@ -125,8 +126,8 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
 
     val layers = new Layers(client, ctx.cores)
     layers.common(warmReqs)
-    layers.put("session.start_s", ctx.sessionStartS, "s", 1)
-    layers.put("sources.load_s", Stats.median(setups), "s", setups.length)
+    layers.put("session.start_s", Stats.median(setups.map(_.sessionS)), "s", setups.length)
+    layers.put("sources.load_s", Stats.median(setups.map(_.loadS)), "s", setups.length)
     Seq("sources.lookup_build", "result.collect").foreach { s =>
       val (v, n) = layers.spanMs(s, warmReqs)
       layers.put(s + "_ms", v, "ms", n)
@@ -150,13 +151,13 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
 
     val report = mutable.ArrayBuffer[(String, String)](
       "phases_s" -> ctx.clock.render,
-      "setup_runs_s" -> setups.map(x => f"$x%.2f").mkString(","),
+      "setup_runs_s" -> Setup.render(setups),
       "data" -> s"$dataDir (TPC-H-style tables, sf0.001); key order and lookup ids from seed ${ctx.seed}",
       "keys" -> s"${Keys.length} benchmarked: ${Keys.mkString(",")}",
       "skipped" -> s"${Absent.length} keys whose input is absent (${AbsentReason}): ${Absent.mkString(",")}",
       "excluded" -> s"${OutsideCheckout.length} keys that write outside the working tree (${OutsideReason}): ${OutsideCheckout.mkString(",")}",
       "not_in_key_set" -> (SparkEntry.queries.keySet -- Keys -- Absent -- OutsideCheckout).toSeq.sorted.mkString(","),
-      "executions_per_key" -> (1 + warm.length).toString)
+      "executions_per_key" -> Keys.map(k => s"$k=${(1 + warm.length) * perPass(k)}").mkString(","))
     report ++= Stats.tail("lookup", lat("lookup"))
     report += "key_warm_ms" -> warmReqs.groupBy(o => keyOf(o.id)).toSeq
       .map { case (k, os) => (k, Stats.median(os.map(_.ms))) }.sortBy(-_._2)
@@ -168,11 +169,14 @@ final class RegistryWorkload(ctx: Ctx, dataDir: String) {
 
 object RegistryWorkload {
   val LookupTable = "perfbench_customers"
-  val SetupRuns = 3
   val LookupsPerPass = 4
+  /** Executions of a key in every pass: the two keys behind
+    * `khop_p50_ms` and `ssp_p50_ms` run three times, so their medians
+    * rest on more than a handful of samples. */
+  def perPass(key: String): Int = if (kindOf(key) == "key") 1 else 3
   /** Warm passes run while another fits in the run's seconds, and at
     * least this many. */
-  val MinWarmPasses = 6
+  val MinWarmPasses = 5
   /** The benchmarked keys: at least one from every registry module,
     * including a k-hop and an ssp key, chosen so that a cold and a warm
     * pass fit one run. */

@@ -36,6 +36,17 @@ class TraceSpec extends AnyFunSuite {
     assert(residual.toDouble / root.nanos <= Layers.MaxResidual)
   }
 
+  test("the run's residual share is summed residual over summed wall") {
+    val spans = Seq(
+      span(0, -1, 0, 0, 100), span(1, 0, 0, 0, 70), // a short request with a 30 ns gap
+      span(2, -1, 1, 100, 1000), span(3, 2, 1, 100, 990))
+    val attributed = Trace.attribution(spans)
+    assert(attributed.map(_._3) == Seq(30L, 10L))
+    assert(Layers.residualShare(attributed) == 40.0 / 1000)
+    assert(Layers.residualShare(attributed) <= Layers.MaxResidual)
+    assert(Layers.residualShare(Nil) == 0.0)
+  }
+
   test("a traced request's spans nest under its root and account for its wall") {
     val t = new Trace(on = true)
     t.request(0, "req.khop") {
@@ -64,8 +75,9 @@ class TraceSpec extends AnyFunSuite {
   }
 
   test("the request stream keeps the mix in every short prefix") {
+    val data = GraphData.powerLaw(1000, 10000, 5)
     for (seed <- 1 to 20) {
-      val rs = GraphWorkload.requests(new java.util.SplittableRandom(seed), 1000)
+      val rs = GraphWorkload.requests(new java.util.SplittableRandom(seed), data)
         .take(GraphWorkload.MinWindow).toSeq
       val ks = rs.collect { case KHop(_, k) => k }.sorted
       assert(ks.length == 7 && (1 to 3).forall(k => ks.count(_ == k) >= 2))
@@ -73,6 +85,19 @@ class TraceSpec extends AnyFunSuite {
       assert(rs.count(_.isInstanceOf[Ssp]) == 6)
       assert(rs.count(_.isInstanceOf[Lookup]) == 5)
       assert(rs.collect { case KHop(s, _) => s; case Ssp(s, _) => s }.forall(_ < 100))
+    }
+  }
+
+  test("ssp targets sit at the hop distance asked for") {
+    val data = GraphData.powerLaw(2000, 20000, 3)
+    val rng = new java.util.SplittableRandom(1)
+    for (source <- Seq(0, 5, 150); hops <- Seq(1, 2, 3, 4)) {
+      val levels = data.levels(source, -1)
+      val t = data.targetAt(source, hops, rng)
+      if (levels.indices.exists(v => v != source && levels(v) == hops)) {
+        assert(t != source && levels(t) == hops)
+        assert(data.shortestPath(source, t) == hops)
+      }
     }
   }
 
